@@ -16,8 +16,8 @@ The contract that resolves the tension:
 - Operators register every internal persist through :func:`track`
   instead of calling ``persist()`` directly.
 - Whoever runs the action calls :func:`release` AFTER materializing the
-  result (``bench.py`` does per timed query; the correctness gates run
-  one query per comparison; ``tests/test_cache_hygiene.py`` pins that
+  result (``perfbench/worker.py`` does per timed query; the correctness
+  gates run one query per comparison; ``tests/test_cache_hygiene.py`` pins that
   release leaves the CacheManager empty).
 - Caches an operator fully consumes internally (e.g. the per-round
   label tables in ``connected_components``) stay self-managed — they

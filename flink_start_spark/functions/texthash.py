@@ -233,12 +233,6 @@ def simhash32_from_hashes(hash_arr: Column) -> Column:
         )
     return out
 
-def simhash32(token_arr: Column) -> Column:
-    """Convenience form over raw tokens — fine for small arrays/tests;
-    hot paths should materialize the md5 array and call
-    :func:`simhash32_from_hashes` (see operators/dedup.py)."""
-    return simhash32_from_hashes(F.transform(token_arr, lambda w: F.md5(w)))
-
 
 def bag_fingerprint(text: Column) -> Column:
     """Order-insensitive document fingerprint: md5 of the sorted distinct

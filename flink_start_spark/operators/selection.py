@@ -94,22 +94,11 @@ def _bjoin(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
     return left.join(F.broadcast(right), keys)
 
 
-def _wcount(weight_col: str | None) -> Column:
-    """The row-multiplicity aggregate: plain ``count(*)`` for row-level
-    inputs, ``sum(weight)`` for pre-grouped (value, multiplicity)
-    inputs. Ranks over the weighted relation are ranks over the
-    expanded multiset, so every downstream formula is unchanged."""
-    if weight_col is None:
-        return F.count(F.lit(1))
-    return F.sum(F.col(weight_col).cast("long"))
-
-
 def _bucketed(
     slim: DataFrame,
     keys: list[str],
     value_col: str,
     n_buckets: int,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Attach ``_bkt`` (monotone range bucket of ``value_col``) plus the
     per-key ``_vmin``/``_vmax``/``_gcnt`` stats used to derive it.
@@ -123,7 +112,7 @@ def _bucketed(
     stats = slim.groupBy(*keys).agg(
         F.min(value_col).alias("_vmin"),
         F.max(value_col).alias("_vmax"),
-        _wcount(weight_col).alias("_gcnt"),
+        F.count(F.lit(1)).alias("_gcnt"),
     )
     v = F.col(value_col)
     span = F.col("_vmax") - F.col("_vmin")
@@ -140,7 +129,6 @@ def _prefix_targets(
     d: DataFrame,
     keys: list[str],
     rank_fn: Callable[[Column], Column],
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Phase 1+2: per-key histogram, folded (no window) into the target
     bucket for rank ``rank_fn(count)``.
@@ -149,7 +137,7 @@ def _prefix_targets(
     target rank), ``_tbkt`` (bucket holding rank ``_r``) and
     ``_cum_before`` (rows in earlier buckets).
     """
-    hist = d.groupBy(*keys, "_bkt").agg(_wcount(weight_col).alias("_bc"))
+    hist = d.groupBy(*keys, "_bkt").agg(F.count(F.lit(1)).alias("_bc"))
     arr = hist.groupBy(*keys).agg(
         F.array_sort(F.collect_list(F.struct("_bkt", "_bc"))).alias("_h")
     )
@@ -221,7 +209,6 @@ def exact_rank_value(
     rank_fn: Callable[[Column], Column] | None = None,
     n_buckets: int = 1024,
     out_col: str = "_sel_value",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Per-key exact VALUE at rank ``rank_fn(count)`` under ascending
     value order — default the lower median, ``floor((cnt+1)/2)``.
@@ -232,31 +219,21 @@ def exact_rank_value(
     are interchangeable for value selection, so no tiebreak column is
     needed and NO per-key sort of rows ever happens — the heaviest step
     is a ``groupBy(keys, value)`` count inside one target bucket.
-
-    ``weight_col``: treat each input row as ``weight`` identical rows
-    (the caller pre-collapsed the corpus to per-(key, value) counts —
-    round-11 optimization: value selection only ever needs the distinct-
-    value multiset, so the corpus-sized relation never has to flow
-    through the topology at all). Every count becomes ``sum(weight)``;
-    ranks over the weighted relation equal ranks over the expanded
-    multiset row-for-row, so the selected value and ``_gcnt`` are
-    bit-identical to the unweighted call on the raw rows.
     """
     keys = list(keys)
     if rank_fn is None:
         rank_fn = lambda cnt: F.floor((cnt + F.lit(1)) / F.lit(2))  # noqa: E731
-    wcols = [weight_col] if weight_col else []
     # the topology scans its input 3x (stats, histogram, resolve):
     # persist the narrow projection — unless the caller already persists
     # the input, in which case a second cache would just duplicate the
     # materialization pass (each scan re-reads the caller's cache).
     slim = (
-        df.select(*keys, value_col, *wcols)
+        df.select(*keys, value_col)
         if df.is_cached
-        else C.track(df.select(*keys, value_col, *wcols))
+        else C.track(df.select(*keys, value_col))
     )
-    d = _bucketed(slim, keys, value_col, n_buckets, weight_col)
-    target = _prefix_targets(d, keys, rank_fn, weight_col)
+    d = _bucketed(slim, keys, value_col, n_buckets)
+    target = _prefix_targets(d, keys, rank_fn)
     # Phase 3: distinct-value counts inside the single target bucket,
     # folded to the value whose cumulative count crosses the local rank.
     # _lr is constant per key, so grouping by it is free and keeps it
@@ -267,7 +244,7 @@ def exact_rank_value(
         .withColumn("_lr", F.col("_r") - F.col("_cum_before"))
     )
     vc = in_bucket.groupBy(*keys, "_lr", value_col).agg(
-        _wcount(weight_col).alias("_vc")
+        F.count(F.lit(1)).alias("_vc")
     )
     vh = vc.groupBy(*keys, "_lr").agg(
         F.array_sort(F.collect_list(F.struct(F.col(value_col), F.col("_vc")))).alias(
@@ -305,7 +282,6 @@ def exact_quantile_values(
     probs: Sequence[float],
     n_buckets: int = 1024,
     out_col: str = "_q_value",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Per-key exact lower-quantile VALUES for several probabilities in
     ONE histogram pass — the multi-rank generalization of
@@ -318,20 +294,16 @@ def exact_quantile_values(
     per-key histogram and all in-bucket resolves share one filtered
     scan — cost is independent of ``len(probs)`` up to the (tiny)
     per-target fold work.
-
-    ``weight_col``: pre-grouped multiset input, exactly as in
-    :func:`exact_rank_value`.
     """
     keys = list(keys)
     probs = [float(p) for p in probs]
-    wcols = [weight_col] if weight_col else []
     slim = (
-        df.select(*keys, value_col, *wcols)
+        df.select(*keys, value_col)
         if df.is_cached
-        else C.track(df.select(*keys, value_col, *wcols))
+        else C.track(df.select(*keys, value_col))
     )
-    d = _bucketed(slim, keys, value_col, n_buckets, weight_col)
-    hist = d.groupBy(*keys, "_bkt").agg(_wcount(weight_col).alias("_bc"))
+    d = _bucketed(slim, keys, value_col, n_buckets)
+    hist = d.groupBy(*keys, "_bkt").agg(F.count(F.lit(1)).alias("_bc"))
     arr = hist.groupBy(*keys).agg(
         F.array_sort(F.collect_list(F.struct("_bkt", "_bc"))).alias("_h")
     )
@@ -403,7 +375,7 @@ def exact_quantile_values(
     tb = targets.select(*keys, "_tbkt").distinct()
     in_bucket = _bjoin(d, tb.withColumnRenamed("_tbkt", "_bkt"), [*keys, "_bkt"])
     vc = in_bucket.groupBy(*keys, "_bkt", value_col).agg(
-        _wcount(weight_col).alias("_vc")
+        F.count(F.lit(1)).alias("_vc")
     )
     vh = vc.groupBy(*keys, "_bkt").agg(
         F.array_sort(F.collect_list(F.struct(F.col(value_col), F.col("_vc")))).alias(

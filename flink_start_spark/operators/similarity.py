@@ -28,16 +28,6 @@ from flink_start_spark.functions import lsh_scale as LS
 from flink_start_spark.functions import vector as V
 
 
-def _cell_cosine(av, bv, an, bn):
-    """Rounded cosine from pre-materialized norms — the cell-scoped
-    pair-scoring expression semdedup_flags and knn_label_purity share.
-    NULL when either norm is zero: under the session's ANSI mode an
-    unguarded /0 would kill the whole query on one all-zeros
-    embedding, and the oracles' NULLIF denominator yields NULL there."""
-    denom = an * bn
-    return F.round(F.when(denom != 0.0, V.dot(av, bv) / denom), 6)
-
-
 def _cell_max_smaller_pd(pdf):
     """Per-cell pandas scorer for :func:`semdedup_flags`: for every
     member, the max RAW cosine to any smaller-id member of the same

@@ -41,45 +41,49 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    """Load one named table from ``{sf_dir}/{name}.parquet``.
+def restore_timestamp(df: DataFrame, col: str, physical_type: str) -> DataFrame:
+    """Restore ``col`` to TimestampType from the type the parquet reader
+    produced for it (``physical_type``, as in ``df.dtypes``).
 
     The driver's parquet stores timestamps as TIMESTAMP(NANOS), which the
-    Spark reader maps to epoch-nano LongType under
-    ``spark.sql.legacy.parquet.nanosAsLong``; we restore TimestampType
-    here (a pure projection — stays inside whole-stage codegen, does not
-    block pushdown on the remaining columns).
+    reader maps to epoch-nano ``bigint`` under
+    ``spark.sql.legacy.parquet.nanosAsLong``; an NTZ writer yields
+    ``timestamp_ntz``. Both become a pure projection (stays inside
+    whole-stage codegen, does not block pushdown on other columns); any
+    other type is returned unchanged. The one rule the batch loader and
+    the streaming scan (streaming/pipelines.py) share.
+    """
+    if physical_type == "bigint":  # TIMESTAMP(NANOS) → epoch nanos
+        # exact integer arithmetic (epoch-nanos exceed double's 2^53, so
+        # float division has a 256 ns ULP), and FLOOR semantics to match
+        # the oracle's epoch_ns // 1000 on pre-1970 values too: bare `div`
+        # truncates toward zero and would shift a negative-epoch
+        # sub-microsecond value 1 us late; subtracting pmod first makes
+        # the numerator an exact multiple, where div == floor-div.
+        return df.withColumn(
+            col,
+            F.timestamp_micros(F.expr(f"(`{col}` - pmod(`{col}`, 1000)) div 1000")),
+        )
+    if physical_type == "timestamp_ntz":  # MICROS, not UTC-adjusted
+        # Session tz is pinned to UTC, so NTZ → LTZ is the identity on the
+        # wall-clock values the oracle sees.
+        return df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
+    """Load one named table from ``{sf_dir}/{name}.parquet``, with every
+    timestamp column restored to TimestampType (:func:`restore_timestamp`).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
     ensure_session_confs(spark)
     path = os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet")
     df = spark.read.parquet(path)
-    expected = TABLES[name]
     actual = dict(df.dtypes)
-    for field in expected.fields:
+    for field in TABLES[name].fields:
         if isinstance(field.dataType, T.TimestampType):
-            if actual.get(field.name) == "bigint":  # TIMESTAMP(NANOS) → epoch nanos
-                # exact integer arithmetic (epoch-nanos exceed double's
-                # 2^53, so float division has a 256 ns ULP), and FLOOR
-                # semantics to match the oracle's epoch_ns // 1000 on
-                # pre-1970 values too: bare `div` truncates toward zero
-                # and would shift a negative-epoch sub-microsecond value
-                # 1 us late; subtracting pmod first makes the numerator
-                # an exact multiple, where div == floor-div.
-                df = df.withColumn(
-                    field.name,
-                    F.timestamp_micros(
-                        F.expr(
-                            f"(`{field.name}` - pmod(`{field.name}`, 1000))"
-                            " div 1000"
-                        )
-                    ),
-                )
-            elif actual.get(field.name) == "timestamp_ntz":  # MICROS, not UTC-adjusted
-                # Session tz is pinned to UTC, so NTZ → LTZ is the identity
-                # on the wall-clock values the oracle sees.
-                df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+            df = restore_timestamp(df, field.name, actual.get(field.name, ""))
     return df
 
 

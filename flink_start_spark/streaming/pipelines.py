@@ -46,7 +46,10 @@ def stream_events(
     """
     import os
 
-    from flink_start_spark.sources.catalog import ensure_session_confs
+    from flink_start_spark.sources.catalog import (
+        ensure_session_confs,
+        restore_timestamp,
+    )
 
     ensure_session_confs(spark)
     reader = spark.readStream
@@ -60,46 +63,27 @@ def stream_events(
         path_dir = f"{path_dir[:-1]}[{path_dir[-1]}]"
     # Streaming needs an EXPLICIT read schema, and the physical type of
     # `ts` differs by writer: the driver's parquet stores
-    # TIMESTAMP(NANOS) → bigint under nanosAsLong (see
-    # sources/catalog.py), while a Spark-written events table (the
-    # synthesized sf1 corpus) stores a real timestamp type the reader
-    # would reject under a pinned `ts long` schema
+    # TIMESTAMP(NANOS) → bigint under nanosAsLong, while a Spark-written
+    # events table (the synthesized sf1 corpus) stores a real timestamp
+    # type the reader would reject under a pinned `ts bigint` schema
     # (PARQUET_COLUMN_DATA_TYPE_MISMATCH). Probe the footer with one
     # batch-schema read — metadata only, no data scan — and branch. An
     # EMPTY / not-yet-populated directory (the canonical file-stream
     # pattern: start the query, then let a producer fill the dir) has
-    # no footer to probe — fall back to the driver-corpus nanos schema,
-    # the contract the pre-probe code pinned.
+    # no footer to probe — fall back to the testdata nanos schema.
+    # The conversion back to TimestampType is the batch loader's, so
+    # streaming/batch window parity holds for every writer.
     try:
-        probe = dict(spark.read.parquet(path_dir).dtypes)
+        ts_type = dict(spark.read.parquet(path_dir).dtypes).get("ts", "")
     except Exception:
-        probe = {"ts": "bigint"}
-    if probe.get("ts", "").startswith("timestamp"):
-        # covers timestamp AND timestamp_ntz: the batch loader
-        # (sources/catalog.py) normalizes NTZ→LTZ with an explicit
-        # cast; mirror it so streaming/batch window parity holds for
-        # NTZ-writer corpora too
-        ts_schema = (
-            f"event_id long, ts {probe['ts']}, user_id long, "
-            "event_type string, value double, props string"
-        )
-        df = reader.schema(ts_schema).parquet(path_dir)
-        if probe["ts"] == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    nanos_schema = (
-        "event_id long, ts long, user_id long, event_type string, "
+        ts_type = ""
+    if not ts_type.startswith("timestamp"):
+        ts_type = "bigint"
+    df = reader.schema(
+        f"event_id long, ts {ts_type}, user_id long, event_type string, "
         "value double, props string"
-    )
-    df = reader.schema(nanos_schema).parquet(path_dir)
-    # exact integer arithmetic with FLOOR semantics — the same pmod
-    # form as the batch loader (sources/catalog.py): bare `div`
-    # truncates toward zero and would shift pre-1970 sub-microsecond
-    # values 1 us late relative to the batch path and the oracle's
-    # epoch_ns // 1000, breaking streaming/batch window parity
-    return df.withColumn(
-        "ts", F.timestamp_micros(F.expr("(ts - pmod(ts, 1000)) div 1000"))
-    )
+    ).parquet(path_dir)
+    return restore_timestamp(df, "ts", ts_type)
 
 
 def stream_user_activity(

@@ -1,8 +1,8 @@
 """Synthesize a ~10x sf0.1 dataset ("sf1") for the second-decade
 scaling check (round-6 verdict item 3): the driver provides
 sf0.001/0.01/0.1; this builds `.localdata/sf1/` from sf0.1 with the
-same schemas so `bench.py --sf-pair .../sf0.1,.../.localdata/sf1`
-measures the 0.1 -> 1 decade on the heaviest families.
+same schemas, so `python scripts/crosscheck.py .localdata/sf1` checks
+the whole catalog one decade past sf0.1.
 
     python scripts/make_sf1.py [copies]   # default 10
 

@@ -88,7 +88,7 @@ def main() -> None:
     # each timed sample REBUILDS the plan from a fresh spark.read:
     # re-collecting one DataFrame object reuses the first execution's
     # shuffle outputs (skipped stages) and times ~0 — the same reason
-    # bench.py rebuilds per run
+    # perfbench rebuilds every query per run
     def full_df():
         return spark.read.parquet(path).groupBy().agg(*agg)
 

@@ -76,53 +76,6 @@ def test_exact_rank_value_arbitrary_rank(spark, skewed):
     assert naive == mine
 
 
-def test_weighted_selection_matches_row_level(spark, skewed):
-    """weight_col path (round 11): running the selection on the
-    pre-grouped (key, value, count) relation returns the SAME value and
-    _gcnt as the row-level call — for the median, an arbitrary rank,
-    and the multi-quantile path."""
-    vc = skewed.groupBy("lang", "v").agg(F.count(F.lit(1)).alias("_w"))
-    row_med = {
-        r["lang"]: (r["med"], r["_gcnt"])
-        for r in S.exact_rank_value(skewed, ["lang"], "v", out_col="med").collect()
-    }
-    w_med = {
-        r["lang"]: (r["med"], r["_gcnt"])
-        for r in S.exact_rank_value(
-            vc, ["lang"], "v", out_col="med", weight_col="_w"
-        ).collect()
-    }
-    assert row_med == w_med
-    rank = lambda c: F.greatest(F.lit(1), F.floor(c * 9 / 10))  # noqa: E731
-    row_r = {
-        r["lang"]: r["v"]
-        for r in S.exact_rank_value(
-            skewed, ["lang"], "v", rank_fn=rank, out_col="v"
-        ).collect()
-    }
-    w_r = {
-        r["lang"]: r["v"]
-        for r in S.exact_rank_value(
-            vc, ["lang"], "v", rank_fn=rank, out_col="v", weight_col="_w"
-        ).collect()
-    }
-    assert row_r == w_r
-    row_q = {
-        (r["lang"], r["_prob"]): (r["qv"], r["_gcnt"])
-        for r in S.exact_quantile_values(
-            skewed, ["lang"], "v", [0.25, 0.50, 0.75], out_col="qv"
-        ).collect()
-    }
-    w_q = {
-        (r["lang"], r["_prob"]): (r["qv"], r["_gcnt"])
-        for r in S.exact_quantile_values(
-            vc, ["lang"], "v", [0.25, 0.50, 0.75], out_col="qv", weight_col="_w"
-        ).collect()
-    }
-    C.release()
-    assert row_q == w_q
-
-
 def test_exact_quantile_values_match_windows(spark, skewed):
     """Multi-rank path: p25/p50/p75 from ONE histogram pass equal the
     per-rank window picks at rank max(1, ceil(p*cnt))."""
