@@ -64,7 +64,7 @@ def tracked_count() -> int:
     return len(_TRACKED)
 
 
-_COUNT_MEMO: dict[tuple[int, str], int] = {}
+_COUNT_MEMO: dict[tuple[str, str, tuple[str, ...]], int] = {}
 
 
 def memo_count(df: DataFrame) -> int:
@@ -99,7 +99,9 @@ def memo_count(df: DataFrame) -> int:
     has already scanned is undefined behavior anyway). Keyed on the
     SparkContext applicationId (unique per context incarnation) so a
     stopped-and-recreated session (the vanilla gate) never reads a
-    stale entry; tests that rewrite a path in-place within one session
+    stale entry, and the first insert under a new context drops every
+    other context's entries, so the memo never outgrows one session;
+    tests that rewrite a path in-place within one session
     must call :func:`clear_count_memo`.
     """
     try:
@@ -118,6 +120,10 @@ def memo_count(df: DataFrame) -> int:
     except Exception:  # py4j/internal API drift — fall back to a plain count
         return df.count()
     if key not in _COUNT_MEMO:
+        # a stopped context's entries can never hit again: drop them so
+        # the memo holds one session's counts, not every session's
+        for stale in [k for k in _COUNT_MEMO if k[0] != key[0]]:
+            del _COUNT_MEMO[stale]
         _COUNT_MEMO[key] = df.count()
     return _COUNT_MEMO[key]
 

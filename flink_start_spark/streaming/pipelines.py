@@ -90,7 +90,8 @@ def stream_user_activity(
     spark: SparkSession, path_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """Streaming JSON user-activity source (the reference's O1 shape):
-    one JSON-lines file per micro-batch replays arrival order."""
+    each micro-batch reads up to ``max_files_per_trigger`` JSON-lines
+    files, oldest first, so file order replays arrival order."""
     df = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .schema(USER_ACTIVITY_RAW)

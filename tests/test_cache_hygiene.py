@@ -140,3 +140,19 @@ def test_memo_count_never_memoizes_fileless_plans(spark):
     assert cache.memo_count(b) == 9
     assert len(cache._COUNT_MEMO) == 0  # nothing memoized for either
     cache.clear_count_memo()
+
+
+def test_memo_count_drops_other_sessions_entries(spark):
+    """An entry keyed by a stopped SparkContext's applicationId can never
+    hit again; the next insert must drop it so the memo stays bounded
+    across sessions (one process can build many contexts in turn)."""
+    from flink_start_spark.sources.catalog import load_table
+
+    cache.clear_count_memo()
+    stale = ("app-stopped-0000", "Relation [none#0L] parquet", ("f.parquet",))
+    cache._COUNT_MEMO[stale] = 7
+    emb = load_table(spark, "embeddings", SF_DIR)
+    assert cache.memo_count(emb) == emb.count()
+    assert stale not in cache._COUNT_MEMO
+    assert len(cache._COUNT_MEMO) == 1
+    cache.clear_count_memo()

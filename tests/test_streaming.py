@@ -348,3 +348,42 @@ def test_stream_events_reads_ntz_writer(spark, tmp_path):
     rows = spark.table("ntz_sink").orderBy("event_id").collect()
     assert [r["event_id"] for r in rows] == [1, 2]
     assert rows[0]["ts"] is not None
+
+
+def test_backlog_batch_lists_files_in_driver(spark, tmp_path):
+    """A micro-batch of more files than Spark's parallel-listing threshold
+    (32) must not launch a listing job: on a local master that job adds
+    one task per file and no machines, and it was the largest phase of
+    every 150-file backlog batch. Spark labels the job "Listing leaf
+    files and directories for N paths"; the stage name is only the
+    query's call site, so the label is read from the status store."""
+    d = tmp_path / "backlog"
+    d.mkdir()
+    for i in range(40):
+        (d / f"f_{i:03d}.json").write_text(
+            json.dumps(
+                {"userId": f"u{i}", "activity": "register",
+                 "timestamp": "2025-08-03T13:00:02Z"}
+            )
+        )
+    q = (
+        stream_user_activity(spark, str(d), max_files_per_trigger=40)
+        .writeStream.format("memory")
+        .queryName("backlog_sink")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = spark.sparkContext.statusTracker(), jsc.statusStore()
+    labels = []
+    for job in tracker.getJobIdsForGroup(str(q.runId)):
+        for stage in tracker.getJobInfo(job).stageIds:
+            desc = store.lastStageAttempt(stage).description()
+            labels.append(desc.get() if desc.isDefined() else "")
+    assert labels, "the query ran no job under its run id"
+    listing = [s for s in labels if s.startswith("Listing leaf files")]
+    assert not listing, f"backlog batch launched a listing job: {listing}"
+    assert spark.table("backlog_sink").count() == 40
