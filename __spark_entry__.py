@@ -12,11 +12,19 @@ is a thin adapter over its query catalog
 
 from __future__ import annotations
 
+import ast
+import functools
 import glob
+import hashlib
+import importlib
+import importlib.util
+import inspect
 import json
 import os
+import pkgutil
 import re
 import sys
+import types
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,22 +85,191 @@ def _last_verified_round() -> dict[str, tuple[int, bool]]:
     return last
 
 
-def _content_fingerprints() -> dict[str, str]:
-    """Per-query md5 of (registered oracle SQL + query function
-    source) — the definition a driver check certifies. Computed live;
-    compared against the committed QUERY_FINGERPRINTS.json snapshot
-    (scripts/update_fingerprints.py maintains it at round open)."""
-    import hashlib
-    import inspect
+_PKG = "flink_start_spark"
 
+
+def _pkg_member(obj: object) -> object | None:
+    """``obj`` unwrapped if it is a function or class defined in the
+    package, else None."""
+    obj = inspect.unwrap(obj) if callable(obj) else obj
+    if not (inspect.isfunction(obj) or inspect.isclass(obj)):
+        return None
+    mod = getattr(obj, "__module__", None) or ""
+    return obj if mod.split(".")[0] == _PKG else None
+
+
+def _code_objects(code: types.CodeType):
+    yield code
+    for const in code.co_consts:
+        if isinstance(const, types.CodeType):  # lambdas, inner defs
+            yield from _code_objects(const)
+
+
+@functools.cache
+def _module_bindings(
+    modname: str,
+) -> tuple[dict[str, tuple[str, frozenset[str]]], dict[str, tuple[str, str]]]:
+    """Module-level statements of package module ``modname``: name ->
+    (source of the assignments that bind it, names they read), and
+    name -> (module, name) for ``from <package module> import name``."""
+    try:
+        src = inspect.getsource(sys.modules[modname])
+    except (KeyError, OSError, TypeError):
+        return {}, {}
+    lines = src.splitlines(keepends=True)
+    pkg = modname if hasattr(sys.modules[modname], "__path__") else modname.rpartition(".")[0]
+    assigns: dict[str, tuple[str, frozenset[str]]] = {}
+    imports: dict[str, tuple[str, str]] = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            text = "".join(lines[node.lineno - 1 : node.end_lineno])
+            names = {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+            names |= {n.attr for n in ast.walk(node) if isinstance(n, ast.Attribute)}
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        prev_text, prev_names = assigns.get(n.id, ("", frozenset()))
+                        assigns[n.id] = (prev_text + text, prev_names | names)
+        elif isinstance(node, ast.ImportFrom):
+            base = importlib.util.resolve_name("." * node.level + (node.module or ""), pkg)
+            if base.split(".")[0] == _PKG:
+                for al in node.names:
+                    imports[al.asname or al.name] = (base, al.name)
+    return assigns, imports
+
+
+def _binding(modname: str, name: str) -> tuple[str, str] | None:
+    """(qualified name, assignment source) of package global ``name`` as
+    seen from ``modname``, following package imports to the module that
+    assigns it; None if no package module assigns it."""
+    seen = set()
+    while (modname, name) not in seen:
+        seen.add((modname, name))
+        assigns, imports = _module_bindings(modname)
+        if name in assigns:
+            return f"{modname}.{name}", assigns[name][0]
+        if name not in imports:
+            return None
+        modname, name = imports[name]
+    return None
+
+
+def _resolve(names: set[str], spaces: list[tuple[str | None, dict]]) -> list[tuple[str, object]]:
+    """(qualified name, object) of the package functions/classes that
+    ``names`` denote in ``spaces`` — (module name or None, namespace)
+    pairs; a package module found there adds its own namespace — and
+    (qualified name, assignment source) of the other package globals."""
+    seen_mods, out = set(), []
+    while spaces:
+        modname, ns = spaces.pop()
+        for n in sorted(names & ns.keys()):
+            v = ns[n]
+            if isinstance(v, types.ModuleType):
+                if v.__name__.split(".")[0] == _PKG and v.__name__ not in seen_mods:
+                    seen_mods.add(v.__name__)
+                    spaces.append((v.__name__, vars(v)))
+            elif (member := _pkg_member(v)) is not None:
+                out.append((f"{member.__module__}.{member.__qualname__}", member))
+            elif modname and (bound := _binding(modname, n)) is not None:
+                out.append(bound)
+    return out
+
+
+@functools.cache
+def _neighbours(obj: object) -> tuple[tuple[str, object], ...]:
+    """What ``obj`` names directly, as :func:`_resolve` pairs. For a
+    function: its globals, attributes of package modules it names
+    (``S.with_rank``), function-local ``from flink_start_spark...
+    import``, closure cells, and string constants that name a catalog
+    query (``QUERIES[name]``). A class reaches what its methods reach.
+    A package global (``"module.name"``) reaches what its assignments
+    read, so a rate table or a schema is hashed with the code using it."""
+    if isinstance(obj, str):
+        modname, _, name = obj.rpartition(".")
+        refs = _module_bindings(modname)[0][name][1]
+        return tuple(_resolve(set(refs), [(modname, vars(sys.modules[modname]))]))
+    if inspect.isclass(obj):
+        out = []
+        for attr in vars(obj).values():
+            fn = getattr(attr, "__func__", getattr(attr, "fget", attr))
+            if inspect.isfunction(fn):
+                out.extend(_neighbours(fn))
+        return tuple(out)
+    code = getattr(obj, "__code__", None)
+    if code is None:
+        return ()
+    names, strings = set(code.co_freevars), set()
+    for c in _code_objects(code):
+        names.update(c.co_names)
+        strings.update(k for k in c.co_consts if isinstance(k, str))
+    closure = zip(code.co_freevars, obj.__closure__ or ())
+    spaces = [
+        (obj.__globals__.get("__name__"), obj.__globals__),
+        (None, {n: c.cell_contents for n, c in closure}),
+    ]
+    spaces += [
+        (n, vars(sys.modules[n]))
+        for n in names
+        if n.split(".")[0] == _PKG and n in sys.modules
+    ]
+    out = _resolve(names, spaces)
+    qm = query_map()
+    out.extend((f"{qm[s].__module__}.{qm[s].__qualname__}", qm[s]) for s in strings if s in qm)
+    return tuple(out)
+
+
+@functools.cache
+def _import_package() -> None:
+    """Import every package module: a function-local import resolves
+    through ``sys.modules``, so without this the reach would depend on
+    what the process happened to import before."""
+    for m in pkgutil.walk_packages(sys.modules[_PKG].__path__, _PKG + "."):
+        importlib.import_module(m.name)
+
+
+def _reached(fn: Callable) -> dict[str, object]:
+    """Qualified name -> every package function or class ``fn``
+    reaches, walked recursively through :func:`_neighbours`, and the
+    assignment source of every other package global on the way."""
+    _import_package()
+    reached: dict[str, object] = {}
+    todo = [fn]
+    while todo:
+        for q, v in _neighbours(todo.pop()):
+            if q not in reached and v is not fn:
+                reached[q] = v
+                todo.append(q if isinstance(v, str) else v)
+    return reached
+
+
+@functools.cache
+def _source(obj: object) -> str:
+    """Source text of a function or class, decorators included."""
+    try:
+        return inspect.getsource(obj)
+    except (OSError, TypeError):  # builtins / exec'd defs
+        return getattr(obj, "__name__", repr(obj))
+
+
+def _content_fingerprints() -> dict[str, str]:
+    """Per-query md5 of (registered oracle SQL + query function source
+    + the source of every package function/class it reaches and of the
+    assignments of the other package globals they name, sorted by
+    qualified name) — the definition an oracle check certifies. A rewrite
+    inside a shared operator flips every query that reaches it.
+    Compared against the committed QUERY_FINGERPRINTS.json snapshot
+    (scripts/update_fingerprints.py rebuilds it from git history)."""
     qm, om = query_map(), oracle_sql_map()
     out = {}
     for name, fn in qm.items():
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):  # builtins / exec'd defs
-            src = getattr(fn, "__name__", repr(fn))
-        out[name] = hashlib.md5((om.get(name, "") + src).encode()).hexdigest()
+        reached = _reached(fn)
+        parts = [om.get(name, ""), _source(fn)]
+        parts += [
+            v if isinstance(v, str) else _source(v)
+            for v in (reached[q] for q in sorted(reached))
+        ]
+        out[name] = hashlib.md5("".join(parts).encode()).hexdigest()
     return out
 
 

@@ -483,40 +483,6 @@ def deterministic_centroids(
     )
 
 
-def assign_cells(
-    candidates: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (squared-L2 argmin,
-    ties broken by cell id).
-
-    Broadcast nested-loop against the tiny centroid table expands each
-    row ``n_cells``-fold *within its partition*, then
-    ``groupBy(id).agg(min_by)`` collapses it — partial aggregation
-    eats the expansion map-side, so the shuffle carries ~one row per
-    input vector. This is the ingest-time step of IVF; at 100 TB the
-    output is written alongside the vectors (see
-    :func:`precompute_cells`).
-    """
-    expanded = candidates.select(F.col(id_col), F.col(vec_col)).crossJoin(
-        F.broadcast(centroids)
-    )
-    d2 = V.sq_dist(F.col(vec_col), F.col("center"))
-    return (
-        expanded.select(
-            F.col(id_col), F.col(vec_col), F.col("cell"), d2.alias("_d2")
-        )
-        .groupBy(id_col)
-        .agg(
-            F.min_by("cell", F.struct("_d2", "cell")).alias("cell"),
-            F.first(vec_col).alias(vec_col),
-        )
-        .select(id_col, vec_col, "cell")
-    )
-
-
 def precompute_cells(
     candidates: DataFrame,
     n_cells: int | None = None,
@@ -1156,12 +1122,13 @@ def assign_cells_maponly(
     lexicographic struct min IS argmin-with-cell-tie-break, evaluated
     map-side with no row expansion and no shuffle.
 
-    Bit-identical to :func:`assign_cells` (same sq_dist doubles, same
-    (d2, cell) ordering; array_min is order-independent so the
-    nondeterministic collect_list order cannot matter) but removes the
-    k-fold BNLJ expand + groupBy collapse — at 100 TB the assignment
-    stage becomes scan-speed map work. `assign_cells` remains the
-    relational formulation the IVF oracle mirrors CTE-for-CTE.
+    Bit-identical to the relational formulation the IVF oracle mirrors
+    CTE-for-CTE — a broadcast cross join to the centroids, then
+    ``min_by(cell, (d2, cell))`` per vector — with the same sq_dist
+    doubles and (d2, cell) ordering (array_min is order-independent so
+    the nondeterministic collect_list order cannot matter), but without
+    the k-fold expand + groupBy collapse: at 100 TB the assignment
+    stage becomes scan-speed map work.
 
     ``cell_probe > 1`` is the PAIR-RECALL dial (multi-assignment, the
     standard multi-probe answer to boundary pairs the within-cell

@@ -153,11 +153,6 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: bag-of-words md5 (see texthash)."""
-    return df.select("doc_id", TH.bag_fingerprint(F.col(text_col)).alias("fingerprint"))
-
-
 def validate_documents(
     df: DataFrame, text_col: str = "text", chars_col: str = "n_chars"
 ) -> DataFrame:

@@ -443,8 +443,8 @@ def _cent_cte(per_cell: int) -> str:
 #: O(n*sqrt(k)) scale path whose payoff is measured at SCALED cell
 #: counts, where the flat O(n*n_cells) assignment scan is the bill:
 #: end-to-end semdedup_flags on 200k vectors x 1562 cells reads 47.3s
-#: two-level vs 485.1s flat (10.3x, round-8 HEAD; assignment-only
-#: demo: scripts/assign_scale_demo.py). At toy cell counts (16 cells
+#: two-level vs 485.1s flat (10.3x, round-8 HEAD; recorded history,
+#: its assignment-only demo script is deleted). At toy cell counts (16 cells
 #: below sf1) the tree ADDS ~0.5-1s of fixed stages — the documented
 #: trade. The config-fuzz lane sweeps super_probe 1..4 with the oracle
 #: mirroring the same literal; super_probe is an assignment-fidelity
@@ -2442,7 +2442,7 @@ def embedding_lsh_recall_audit_sql(
         "recall_ge90 isolates the design-point stratum (NULL when no "
         "ge-0.9 sample pairs exist, meaningful on planted/duplicate-"
         "bearing corpora like the fuzz lanes; its batch twin is the "
-        "planted-pair measurement in SIGN_LADDER_DEMO*.json)."
+        "round-10 planted-pair measurement, recorded history)."
     ),
     tags=("similarity", "extension", "audit"),
 )

@@ -1,118 +1,126 @@
-"""Maintain QUERY_FINGERPRINTS.json — the change-aware half of the
-driver-rotation state (round-9 verdict item 2).
+"""Rebuild QUERY_FINGERPRINTS.json from git history.
 
-    python scripts/update_fingerprints.py          # merge-update
-    python scripts/update_fingerprints.py --print  # show stale entries
-    python scripts/update_fingerprints.py --invalidate NAME...
-        # drop recorded entries whose UNDERLYING implementation changed
+    python scripts/update_fingerprints.py          # rebuild the file
+    python scripts/update_fingerprints.py --print  # list changed queries
 
-The driver's correctness rotation (__spark_entry__.queries()) ranks
-queries by the round of their last hash-green check — but a check
-certifies the DEFINITION that existed when it ran. This file records,
-per query, the content fingerprint (md5 of registered oracle SQL +
-query function source) that the latest green check actually covered;
-the rotation treats an entry whose CURRENT fingerprint differs as
-never-checked, so a rewritten query/oracle pair goes to the front of
-the next driver rotation instead of waiting out its green-round rank
-(in round 9 the three ladder-rewritten LSH queries waited a full
-round by construction).
+The correctness rotation (``__spark_entry__.queries()``) ranks
+queries by the round of their last hash-green check, but a check only
+certifies the code it ran on. The rotation therefore treats a query as
+unchecked when its current content fingerprint (oracle SQL + query
+source + the source of every package function it reaches) differs from
+the one recorded here for its last green check.
 
-Merge rule (safe to run any time, but the round-open ritual runs it
-FIRST, before any code changes): an entry updates only when a NEWER
-hash-green driver check exists for it (CORRECTNESS_r{N}.json round >
-the recorded round). Mid-round reruns are no-ops — no new driver
-artifact, no update — so an edited query can never overwrite the
-fingerprint its last check certified.
-
-``--invalidate``: the fingerprint hashes only the registered query
-function's own source + its oracle SQL — a rewrite INSIDE an operator
-module the query calls (e.g. round 10's similarity.py Arrow kernels)
-does not flip it. When an optimization round rewrites a query's
-underlying operator, drop its recorded entry here: with no recorded
-fingerprint the rotation treats the query as never-certified and
-front-ranks it for the next driver correctness sample, which is the
-truthful state — the last green check certified code that no longer
-exists.
+Each entry is computed, not stamped: for a query whose latest check in
+``CORRECTNESS_r{R}.json`` was hash-green, the recorded fingerprint is the
+one of the tree of the commit that added ``CORRECTNESS_r{R}.json`` (found
+with ``git log --diff-filter=A``). That tree's package is exported with
+``git archive`` and hashed in a subprocess that imports it first and then
+loads this checkout's hashing code, so the old catalog wins the import.
+The result depends on git history alone: two runs write the same bytes,
+and uncommitted edits to the package do not change it. A round whose
+artifact is not committed yet, or was committed together with package
+edits (so that commit's tree is not the code the check ran on), records
+nothing, and its queries rank as unchecked.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
+import tarfile
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 FP_PATH = os.path.join(REPO, "QUERY_FINGERPRINTS.json")
 
+#: run in a subprocess: argv = (old tree, this checkout)
+_HASH_OLD_TREE = """
+import importlib.util, json, os, sys
+old, head = sys.argv[1:3]
+sys.path.insert(0, old)
+import flink_start_spark.plans  # the old tree's catalog wins the import
+spec = importlib.util.spec_from_file_location(
+    "_fp_entry", os.path.join(head, "__spark_entry__.py"))
+mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(mod)
+json.dump(mod._content_fingerprints(), sys.stdout)
+"""
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", *args], cwd=REPO, check=True, capture_output=True, text=True
+    ).stdout.strip()
+
+
+def _fingerprints_at(commit: str) -> dict[str, str]:
+    """Content fingerprints of every query in ``commit``'s tree."""
+    with tempfile.TemporaryDirectory() as tmp:
+        tar_path = os.path.join(tmp, "tree.tar")
+        _git("archive", "-o", tar_path, commit, "flink_start_spark")
+        tree = os.path.join(tmp, "tree")
+        with tarfile.open(tar_path) as tar:
+            tar.extractall(tree, filter="data")
+        out = subprocess.run(
+            [sys.executable, "-c", _HASH_OLD_TREE, tree, REPO],
+            cwd=tree,
+            check=True,
+            stdout=subprocess.PIPE,
+            text=True,
+        ).stdout
+    return json.loads(out)
+
+
+def rebuild() -> dict[str, dict]:
+    """name -> {"fp", "round"} for every catalog query whose latest
+    oracle check was hash-green, hashed at that check's commit."""
+    import __spark_entry__ as entry
+
+    catalog = entry.query_map()
+    by_round: dict[int, list[str]] = {}
+    for name, (rnd, green) in entry._last_verified_round().items():
+        if green and name in catalog:
+            by_round.setdefault(rnd, []).append(name)
+    recorded = {}
+    for rnd, names in sorted(by_round.items()):
+        artifact = f"CORRECTNESS_r{rnd:02d}.json"
+        commit = _git("log", "--diff-filter=A", "--format=%H", "--", artifact)
+        if not commit:
+            print(f"{artifact} is not committed; {len(names)} queries unrecorded")
+            continue
+        commit = commit.splitlines()[0]
+        if _git("diff", "--name-only", f"{commit}^", commit, "--", "flink_start_spark"):
+            # the tree then holds package edits the check never ran on
+            print(f"{artifact} was committed with package edits ({commit[:9]}); "
+                  f"{len(names)} queries unrecorded")
+            continue
+        fps = _fingerprints_at(commit)
+        for name in names:
+            recorded[name] = {"fp": fps[name], "round": rnd}
+    return dict(sorted(recorded.items()))
+
 
 def main() -> int:
     import __spark_entry__ as entry
 
-    current = entry._content_fingerprints()
-    last = entry._last_verified_round()
-    try:
-        with open(FP_PATH) as f:
-            recorded = json.load(f)
-    except (OSError, ValueError):
-        recorded = {}
-
-    if "--invalidate" in sys.argv:
-        names = sys.argv[sys.argv.index("--invalidate") + 1 :]
-        unknown = [n for n in names if n not in current]
-        if unknown or not names:
-            print(f"unknown or missing query names: {unknown or '(none given)'}")
-            return 1
-        dropped = [n for n in names if recorded.pop(n, None) is not None]
-        with open(FP_PATH, "w") as f:
-            json.dump(dict(sorted(recorded.items())), f, indent=1)
-        print(f"invalidated {len(dropped)}: {' '.join(dropped)}")
-        return 0
-
     if "--print" in sys.argv:
-        stale = sorted(
-            n
-            for n, fp in current.items()
-            if recorded.get(n, {}).get("fp") != fp
-        )
-        print(f"{len(stale)} entries stale vs recorded fingerprints:")
+        current = entry._content_fingerprints()
+        recorded = entry._recorded_fingerprints()
+        stale = sorted(n for n, fp in current.items() if recorded.get(n) != fp)
+        print(f"{len(stale)}/{len(current)} changed since their last green check:")
         for n in stale:
             print(" ", n)
         return 0
 
-    latest_round = max((rnd for rnd, _ in last.values()), default=-1)
-    updated = 0
-    for name, fp in current.items():
-        rnd, green = last.get(name, (-1, False))
-        if not green:
-            continue
-        rec = recorded.get(name)
-        if rec is None:
-            # first-time recording: the CURRENT fingerprint only
-            # certifies the check if nothing was edited since it ran —
-            # which the round-open ritual (run before any edits) only
-            # guarantees for the just-closed round. An older green
-            # check with no recorded fingerprint (bootstrap gap,
-            # previously-dropped entry) must NOT be stamped with
-            # post-edit content; leaving it unrecorded fails safe (the
-            # rotation front-ranks it until its next driver check).
-            if rnd == latest_round:
-                recorded[name] = {"fp": fp, "round": rnd}
-                updated += 1
-        elif rnd > rec.get("round", -1):
-            recorded[name] = {"fp": fp, "round": rnd}
-            updated += 1
-    # drop entries for queries no longer in the catalog
-    gone = [n for n in recorded if n not in current]
-    for n in gone:
-        del recorded[n]
+    recorded = rebuild()
     with open(FP_PATH, "w") as f:
-        json.dump(dict(sorted(recorded.items())), f, indent=1)
-    print(
-        f"updated {updated} fingerprints, dropped {len(gone)}; "
-        f"{len(recorded)}/{len(current)} recorded"
-    )
+        json.dump(recorded, f, indent=1)
+        f.write("\n")
+    print(f"{len(recorded)}/{len(entry.query_map())} recorded")
     return 0
 
 

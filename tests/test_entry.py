@@ -85,3 +85,75 @@ def test_rotation_ranks_changed_definition_first(monkeypatch):
     assert names.index(victim) < min(names.index(o) for o in others), (
         "changed-definition entry did not outrank unchanged hash-green ones"
     )
+
+
+def test_fingerprint_reach_covers_helpers():
+    """The content fingerprint covers every package function a query
+    reaches, not just the registered function: round 11's hand-kept
+    invalidation list missed embedding_lsh_recall_audit, whose operator
+    was rewritten under it."""
+    qm = entrymod.query_map()
+
+    def reach(name):
+        return entrymod._reached(qm[name])
+
+    # through interval_peak's function-local `from ... import selection as S`
+    assert "flink_start_spark.operators.selection.with_rank_and_sum" in reach(
+        "peak_concurrent_sessions"
+    )
+    # through the QUERIES["ppjoin_exact_pairs"] string lookup
+    assert qm["ppjoin_exact_pairs"] in reach("lsh_recall_audit").values()
+    assert "flink_start_spark.operators.similarity.lsh_near_dup_pairs" in reach(
+        "embedding_lsh_recall_audit"
+    )
+
+
+def test_fingerprint_flips_on_reached_helper_edit(monkeypatch):
+    """Editing a shared helper flips exactly the queries that reach it."""
+    from flink_start_spark.operators import selection
+
+    qm = entrymod.query_map()
+    target = selection.with_rank_and_sum
+    before = entrymod._content_fingerprints()
+    source = entrymod._source
+    monkeypatch.setattr(
+        entrymod, "_source", lambda o: source(o) + ("#edit" if o is target else "")
+    )
+    after = entrymod._content_fingerprints()
+    flipped = {n for n in before if before[n] != after[n]}
+    reaching = {n for n, fn in qm.items() if target in entrymod._reached(fn).values()}
+    assert "peak_concurrent_sessions" in flipped
+    assert flipped == reaching
+
+
+def test_fingerprint_flips_on_module_data_edit(monkeypatch):
+    """Editing a package data global flips the queries that read it,
+    though no function source or oracle SQL changes: stratified_sample
+    and curation_audit read pipeline._SAMPLE_RATES, while their oracles
+    hard-code the same rates."""
+    qm = entrymod.query_map()
+    target = "flink_start_spark.plans.pipeline._SAMPLE_RATES"
+    before = entrymod._content_fingerprints()
+    bindings = entrymod._module_bindings
+
+    def edited(modname):
+        assigns, imports = bindings(modname)
+        if modname == "flink_start_spark.plans.pipeline":
+            text, refs = assigns["_SAMPLE_RATES"]
+            edit = text.replace('"en": 25', '"en": 30')
+            assert edit != text
+            assigns = {**assigns, "_SAMPLE_RATES": (edit, refs)}
+        return assigns, imports
+
+    monkeypatch.setattr(entrymod, "_module_bindings", edited)
+    entrymod._neighbours.cache_clear()
+    try:
+        after = entrymod._content_fingerprints()
+    finally:
+        monkeypatch.undo()
+        entrymod._neighbours.cache_clear()
+    flipped = {n for n in before if before[n] != after[n]}
+    reaching = {n for n, fn in qm.items() if target in entrymod._reached(fn)}
+    assert {"stratified_sample", "curation_audit"} <= flipped
+    assert flipped == reaching
+    assert entrymod._content_fingerprints() == before
