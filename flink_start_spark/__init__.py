@@ -24,7 +24,7 @@ Everything here derives from public knowledge only: the Apache Spark API
 and docs, the reference repo, and published papers (see PAPERS.md).
 """
 
-from flink_start_spark.session import get_spark, stop_spark
+from flink_start_spark.session import get_spark
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 __version__ = "0.1.0"

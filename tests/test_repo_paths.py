@@ -7,8 +7,8 @@ document telling readers to run it:
   module that is a file or package of the repo (next to the importing
   file, or at the root) or that ``importlib.util.find_spec`` finds;
 - every ``scripts/<x>.py`` path and every ``python <x>.py`` command cited
-  in README.md, SCALING.md, COVERAGE.md and the repo's skill recipes
-  names a file that exists.
+  in README.md, SCALING.md, COVERAGE.md, SURVEY.md and the repo's skill
+  recipes names a file that exists.
 """
 
 from __future__ import annotations
@@ -22,9 +22,9 @@ import re
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-#: README, SCALING.md, COVERAGE.md plus the repo's build-and-run recipes
-#: (``<dot-dir>/skills/*/SKILL.md``)
-DOCS = ["README.md", "SCALING.md", "COVERAGE.md"] + sorted(
+#: README, SCALING.md, COVERAGE.md, SURVEY.md plus the repo's build-and-run
+#: recipes (``<dot-dir>/skills/*/SKILL.md``)
+DOCS = ["README.md", "SCALING.md", "COVERAGE.md", "SURVEY.md"] + sorted(
     os.path.relpath(p, REPO)
     for p in glob.glob(os.path.join(REPO, ".*", "skills", "*", "SKILL.md"))
 )
