@@ -29,7 +29,11 @@ long-lived session; it only touches caches this library created.
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame
+
+V = TypeVar("V")
 
 _TRACKED: list[DataFrame] = []
 
@@ -119,13 +123,21 @@ def memo_count(df: DataFrame) -> int:
         )
     except Exception:  # py4j/internal API drift — fall back to a plain count
         return df.count()
-    if key not in _COUNT_MEMO:
-        # a stopped context's entries can never hit again: drop them so
-        # the memo holds one session's counts, not every session's
-        for stale in [k for k in _COUNT_MEMO if k[0] != key[0]]:
-            del _COUNT_MEMO[stale]
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
+    return session_memo(_COUNT_MEMO, key, df.count)
+
+
+def session_memo(memo: dict[tuple, V], key: tuple, compute: Callable[[], V]) -> V:
+    """``memo[key]``, computed by ``compute()`` on a miss — the one rule
+    the package's session memos (this module's counts,
+    ``sources.catalog``'s parquet schemas) share. ``key[0]`` is the
+    SparkContext applicationId: a stopped context's entries can never
+    hit again, so a miss first drops every other context's entries and
+    the memo holds one session's values, not every session's."""
+    if key not in memo:
+        for stale in [k for k in memo if k[0] != key[0]]:
+            del memo[stale]
+        memo[key] = compute()
+    return memo[key]
 
 
 def clear_count_memo() -> None:

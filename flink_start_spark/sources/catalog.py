@@ -3,21 +3,41 @@
 Scale design: parquet scans are the engine's default input (columnar,
 predicate-pushdown + column-pruning through the DataSource V2 reader). At
 100 TB the same call reads a partitioned table directory; nothing here
-collects to the driver. We deliberately do NOT pass an explicit schema to
-``spark.read.parquet`` — parquet files are self-describing (footer metadata,
-no inference pass), and pinning the schema would break pushdown-friendly
-evolution (added columns). `flink_start_spark.schemas` documents the
-expected shapes and is used to validate, not to read.
+collects to the driver. Schemas are never pinned from
+`flink_start_spark.schemas` (it documents the expected shapes and is used
+to validate, not to read): the read schema is the one the parquet footers
+give, so added columns stay visible.
+
+Inferring that schema costs one footer-reading Spark job per
+``spark.read.parquet(path)``. :func:`parquet_schema` pays it once per
+session: it memoizes the inferred schema, and ``load_table`` reads with
+``spark.read.schema(memo)``, which starts no job. The memo key is:
+
+- the SparkContext applicationId — a miss drops other contexts'
+  entries, the rule ``cache.memo_count`` follows too;
+- the path;
+- the session confs that change inference (``_INFERENCE_CONFS``);
+- every file under the path, sorted, with its size and mtime, listed
+  with ``os`` on the driver (no Spark job).
+
+Contract: inputs are immutable within a session, as ``cache.memo_count``
+already requires. Even so, an appended, added or rewritten file changes
+the key, and that load re-infers exactly as an unmemoized read would;
+only a rewrite that keeps a file's name, size and mtime goes unseen.
+Only local paths (no scheme, or ``file:``) are listed. Any other scheme,
+and a missing or empty path, is inferred on every call, as before.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_start_spark.cache import session_memo
 from flink_start_spark.schemas import TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -71,6 +91,63 @@ def restore_timestamp(df: DataFrame, col: str, physical_type: str) -> DataFrame:
     return df
 
 
+#: session confs that change the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+
+
+def _local_files(path: str) -> tuple[tuple[str, int, int], ...]:
+    """Every file under a local ``path`` (or ``path`` itself, if a file)
+    as sorted ``(relative name, size, mtime_ns)``, listed with ``os``
+    (no Spark job). Empty for a non-local scheme, a missing or empty
+    path, or a file that vanished mid-listing."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return ()
+    root = url.path if url.scheme else path
+    try:
+        if os.path.isfile(root):
+            st = os.stat(root)
+            return (("", st.st_size, st.st_mtime_ns),)
+        out = []
+        for d, _, names in os.walk(root):
+            for n in names:
+                f = os.path.join(d, n)
+                st = os.stat(f)
+                out.append((os.path.relpath(f, root), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return ()
+    return tuple(sorted(out))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized per
+    session (module docstring: the memo, its key and its contract). The
+    package's one footer-schema read path: ``load_table`` and the
+    streaming scan's ``ts`` probe both read through it."""
+
+    def infer() -> T.StructType:
+        return spark.read.parquet(path).schema
+
+    files = _local_files(path)
+    if not files:
+        return infer()
+    key = (
+        spark.sparkContext.applicationId,
+        path,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+        files,
+    )
+    return session_memo(_SCHEMA_MEMO, key, infer)
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one named table from ``{sf_dir}/{name}.parquet``, with every
     timestamp column restored to TimestampType (:func:`restore_timestamp`).
@@ -79,8 +156,9 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
     ensure_session_confs(spark)
     path = os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    actual = dict(df.dtypes)
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    actual = {f.name: f.dataType.simpleString() for f in schema.fields}
     for field in TABLES[name].fields:
         if isinstance(field.dataType, T.TimestampType):
             df = restore_timestamp(df, field.name, actual.get(field.name, ""))
@@ -122,8 +200,3 @@ def load_tables(
     """Load several tables at once; defaults to the full catalog."""
     return {n: load_table(spark, n, sf_dir) for n in (names or list(TABLES))}
 
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every catalog table as a temp view for ``spark.sql``."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

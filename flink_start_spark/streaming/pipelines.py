@@ -48,10 +48,30 @@ def stream_events(
 
     from flink_start_spark.sources.catalog import (
         ensure_session_confs,
+        parquet_schema,
         restore_timestamp,
     )
 
     ensure_session_confs(spark)
+    # Streaming needs an EXPLICIT read schema, and the physical type of
+    # `ts` differs by writer: the driver's parquet stores
+    # TIMESTAMP(NANOS) → bigint under nanosAsLong, while a Spark-written
+    # events table (the synthesized sf1 corpus) stores a real timestamp
+    # type the reader would reject under a pinned `ts bigint` schema
+    # (PARQUET_COLUMN_DATA_TYPE_MISMATCH). Probe the footer schema through
+    # the batch loader's memoized probe (one footer job per session and
+    # file set, none on a repeat start) and branch. An EMPTY /
+    # not-yet-populated directory (the canonical file-stream pattern:
+    # start the query, then let a producer fill the dir) has no footer
+    # to probe and is never memoized — fall back to the testdata nanos
+    # schema. The conversion back to TimestampType is the batch loader's,
+    # so streaming/batch window parity holds for every writer.
+    try:
+        ts_type = parquet_schema(spark, path_dir)["ts"].dataType.simpleString()
+    except Exception:
+        ts_type = ""
+    if not ts_type.startswith("timestamp"):
+        ts_type = "bigint"
     reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -61,24 +81,6 @@ def stream_events(
     # source's basePath at the parent directory.
     if os.path.isfile(path_dir) and not path_dir.endswith("]"):
         path_dir = f"{path_dir[:-1]}[{path_dir[-1]}]"
-    # Streaming needs an EXPLICIT read schema, and the physical type of
-    # `ts` differs by writer: the driver's parquet stores
-    # TIMESTAMP(NANOS) → bigint under nanosAsLong, while a Spark-written
-    # events table (the synthesized sf1 corpus) stores a real timestamp
-    # type the reader would reject under a pinned `ts bigint` schema
-    # (PARQUET_COLUMN_DATA_TYPE_MISMATCH). Probe the footer with one
-    # batch-schema read — metadata only, no data scan — and branch. An
-    # EMPTY / not-yet-populated directory (the canonical file-stream
-    # pattern: start the query, then let a producer fill the dir) has
-    # no footer to probe — fall back to the testdata nanos schema.
-    # The conversion back to TimestampType is the batch loader's, so
-    # streaming/batch window parity holds for every writer.
-    try:
-        ts_type = dict(spark.read.parquet(path_dir).dtypes).get("ts", "")
-    except Exception:
-        ts_type = ""
-    if not ts_type.startswith("timestamp"):
-        ts_type = "bigint"
     df = reader.schema(
         f"event_id long, ts {ts_type}, user_id long, event_type string, "
         "value double, props string"
