@@ -50,9 +50,17 @@ Spark/DuckDB hash parity on the rule's non-trivial branches (the
 driver SFs all sit at level 0 by design — firing there is a measured
 regression: 2-3x signature cost for a candidate stage that is already
 93%-precise).
+
+The band-join kernel (:func:`band_rows`, :func:`band_pairs`) lives here
+too: it is the one candidate-generation step every banded family in
+operators/dedup.py and operators/similarity.py runs, so a change to how
+candidates are blocked, counted or cut is a change to one site.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 #: md5-key families: corpus size where the measured quadratic
 #: background term (~8.3e-8 * N^2 false candidates on the sf1-family
@@ -341,3 +349,52 @@ def sign_param_cte(
     bits = f"(CASE {' '.join(bit_whens)} ELSE {sched[0][1]} END)"
     rp = f"(CASE {' '.join(rp_whens)} ELSE {int(sched[0][2])} END)"
     return f"{name} AS (SELECT {nb} AS nb, {bits} AS bits, {rp} AS rp)"
+
+
+def band_rows(keyed: DataFrame, id_col: str, key_cols: list[str]) -> DataFrame:
+    """(id, band, key) rows: one per ``key_cols`` entry per input row,
+    ``band`` its 0-based position in ``key_cols``. Every key column
+    must share one type.
+
+    Three plan-shape rules hold for every banded family (each measured
+    as a >10x blowup when violated):
+
+    1. Unpivot with ONE stack() projection. Not array + explode:
+       InferFiltersFromGenerate synthesizes a size(input)>0 filter from
+       explode, and predicate pushdown inlines the whole upstream
+       expression tree (signature, sign bits) into it, re-running that
+       pipeline once more per row. Not a union of per-band projections:
+       each branch re-evaluates the upstream, since subtrees are not
+       shared across union branches.
+    2. Pair with an equi-join on (band, key) (:func:`band_pairs`). An
+       OR of per-band equalities degrades to a nested-loop cross join,
+       the quadratic shape banding exists to avoid.
+    3. The caller persists (``cache.track``) the keyed projection or
+       these rows before pairing: the self-join references the
+       relation twice, and without the persist Spark runs the key
+       pipeline (and the input scan) once per side.
+    """
+    args = ", ".join(f"{b}, {c}" for b, c in enumerate(key_cols))
+    return keyed.selectExpr(id_col, f"stack({len(key_cols)}, {args}) AS (band, key)")
+
+
+def band_pairs(rows: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of ids sharing a (band, key)
+    row of :func:`band_rows` output — the (band, key) equi self-join.
+    A pair sharing several bands is emitted once; an id is never
+    paired with itself. The id may be any orderable unique value: a
+    struct led by the row id carries its other fields through the
+    candidate rows (operators/dedup.py::simhash_near_dups)."""
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        )
+        .distinct()
+    )

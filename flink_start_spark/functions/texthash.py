@@ -117,18 +117,6 @@ def minhash_from_digest_arrays(digest_cols: list[Column], num_hashes: int) -> Co
     )
 
 
-def minhash_signature(shingle_arr: Column, num_hashes: int = 16) -> Column:
-    """Convenience single-expression MinHash (tests/small data). Hot
-    paths must stage the salted digest arrays as real columns and call
-    :func:`minhash_from_digest_arrays` — inlined digest expressions are
-    re-evaluated once per chunk (4x the md5s; see operators/dedup.py)."""
-    n_seeds = (num_hashes + _CHUNKS_PER_MD5 - 1) // _CHUNKS_PER_MD5
-    digests = [
-        F.transform(shingle_arr, salted_digest_fn(seed)) for seed in range(n_seeds)
-    ]
-    return minhash_from_digest_arrays(digests, num_hashes)
-
-
 def char_grams(text: Column, n: int) -> Column:
     """Ordered character n-grams via transform over a position sequence.
     Referencing the scalar ``text`` column inside the lambda is safe —
@@ -179,7 +167,7 @@ def band_key(signature: Column, band: int, rows: int) -> Column:
     never by building an array and exploding it — InferFiltersFromGenerate
     + predicate pushdown inline the full upstream expression tree into a
     synthesized size()>0 filter under an explode (measured >10x blowup;
-    see operators/dedup.py::minhash_band_rows rule 2).
+    see functions/lsh_scale.py::band_rows rule 1).
     """
     return F.md5(
         F.concat_ws(

@@ -17,6 +17,14 @@ Four tiers, cheapest first, all shuffle-efficient at 100 TB:
    at least one of 4 contiguous 8-bit blocks within Hamming distance
    <= 3 (pigeonhole), so the pair search is a block-keyed bucket join.
 
+Every banded tier (word MinHash, char-gram MinHash, SimHash blocks)
+and the embedding sign-LSH of operators/similarity.py generate
+candidates through one kernel, functions/lsh_scale.py::band_rows +
+band_pairs: a family differs only in the key columns it hands over.
+Both MinHash families stage their signature through one helper
+(:func:`_signature_band_rows`, fed word shingles or char grams) and
+confirm through one exact-Jaccard join (:func:`_jaccard_confirm`).
+
 Streaming twins: ``dropDuplicates``/``dropDuplicatesWithinWatermark``
 (see streaming module). All hashing is engine-portable md5 (see
 functions/texthash.py) so the DuckDB oracle reproduces every stage.
@@ -35,9 +43,11 @@ from flink_start_spark.functions import texthash as TH
 from flink_start_spark.sources.catalog import fan_out
 
 
-def _auto_minhash(df: DataFrame, num_hashes, bands) -> tuple[int, int]:
-    """Resolve the word-family MinHash width: explicit (num_hashes,
-    bands) pass through; both-None engages the corpus-size ladder
+def _auto_minhash(
+    df: DataFrame, num_hashes, bands, ladder=LS.minhash_params
+) -> tuple[int, int]:
+    """Resolve a MinHash family's width: explicit (num_hashes, bands)
+    pass through; both-None engages the family's corpus-size ``ladder``
     (functions/lsh_scale.py — one memoized ``count(*)``, an
     empty-schema pruned scan on parquet input, the auto_n_cells cost
     contract). Passing only one of the two raises — silently defaulting
@@ -48,8 +58,85 @@ def _auto_minhash(df: DataFrame, num_hashes, bands) -> tuple[int, int]:
             "pass both num_hashes and bands, or neither (corpus-scaled auto)"
         )
     if num_hashes is None:
-        num_hashes, bands = LS.minhash_params(C.memo_count(df))
+        num_hashes, bands = ladder(C.memo_count(df))
+    if bands < 1 or num_hashes % bands != 0:
+        # truncating division silently drops signature positions
+        # (weakening the advertised AND/OR collision curve), and
+        # bands > num_hashes degenerates to rows=0 — EVERY band key
+        # becomes md5('') and the candidate self-join goes corpus²,
+        # the exact blowup this operator exists to avoid
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a positive multiple of "
+            f"bands ({bands})"
+        )
     return num_hashes, bands
+
+
+def _signature_band_rows(
+    feats: DataFrame, id_col: str, feat_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """(id, band, key) MinHash band rows over the feature-array column
+    ``feat_col`` (word shingles, char grams): salted digest arrays →
+    signature → one md5 key per band, unpivoted by ``LS.band_rows``.
+
+    Every stage is a real column in its own projection: higher-order-
+    function lambdas sit outside Catalyst's subexpression elimination,
+    so an inlined tree recomputes the feature array per signature
+    component (measured >10x at 5k docs). CollapseProject keeps the
+    stages separate because the intermediates are non-trivial and
+    multiply referenced."""
+    rows = num_hashes // bands
+    # seed count must mirror texthash's md5-chunk packing exactly:
+    # minhash_from_digest_arrays indexes digest_cols[i // chunks_per_md5]
+    n_seeds = -(-num_hashes // TH._CHUNKS_PER_MD5)
+    sig = feats.select(
+        F.col(id_col),
+        *[
+            F.transform(F.col(feat_col), TH.salted_digest_fn(seed)).alias(f"_d{seed}")
+            for seed in range(n_seeds)
+        ],
+    ).select(
+        F.col(id_col),
+        TH.minhash_from_digest_arrays(
+            [F.col(f"_d{s}") for s in range(n_seeds)], num_hashes
+        ).alias("_sig"),
+    )
+    keys = sig.select(
+        F.col(id_col),
+        *[TH.band_key(F.col("_sig"), b, rows).alias(f"_k{b}") for b in range(bands)],
+    )
+    return LS.band_rows(keys, id_col, [f"_k{b}" for b in range(bands)])
+
+
+def _shingle_sets(
+    df: DataFrame, content_col: str, id_col: str, shingle_n: int
+) -> DataFrame:
+    """(id, sh) distinct word-shingle sets, the word family's Jaccard
+    confirm input. TRACKED: the confirm joins it on both ids."""
+    sh = TH.shingles(F.col(content_col), shingle_n)
+    return C.track(fan_out(df).select(F.col(id_col), F.array_distinct(sh).alias("sh")))
+
+
+def _jaccard_confirm(
+    pairs: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    set_col: str,
+    threshold: float,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """Candidate pairs (``a``, ``b``) whose exact Jaccard over
+    ``sets``' distinct-element arrays reaches ``threshold``. Output:
+    a, b, jaccard (rounded 6). ``sets`` is joined on both ids, so
+    callers persist it."""
+    return (
+        pairs.join(sets.select(F.col(id_col).alias(a), F.col(set_col).alias("_set_a")), a)
+        .join(sets.select(F.col(id_col).alias(b), F.col(set_col).alias("_set_b")), b)
+        .withColumn("jaccard", F.round(TH.jaccard(F.col("_set_a"), F.col("_set_b")), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -96,64 +183,11 @@ def minhash_band_rows(
     candidates) would cross the corpus size. The DuckDB oracles mirror
     the rule as a count(*) scalar subquery."""
     num_hashes, bands = _auto_minhash(df, num_hashes, bands)
-    if bands < 1 or num_hashes % bands != 0:
-        # truncating division silently drops signature positions
-        # (weakening the advertised AND/OR collision curve), and
-        # bands > num_hashes degenerates to rows=0 — EVERY band key
-        # becomes md5('') and the candidate self-join goes corpus²,
-        # the exact blowup this operator exists to avoid
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands})"
-        )
-    rows = num_hashes // bands
-    df = fan_out(df)  # md5-per-shingle must not run on one input split
-    # Two hard-won plan-shape rules (each measured as a >10x blowup at
-    # 5k docs when violated):
-    # 1. Materialize every stage (shingles, signature) as a real column
-    #    in its own projection — higher-order-function lambdas sit
-    #    outside Catalyst's subexpression elimination, so an inlined
-    #    tree recomputes the shingle array per signature component.
-    #    CollapseProject keeps the stages separate because the
-    #    intermediates are non-trivial and multiply referenced.
-    # 2. Unpivot band rows with stack() off the materialized signature
-    #    column. NOT array+explode (InferFiltersFromGenerate synthesizes
-    #    a size(input)>0 filter from explode, and predicate pushdown
-    #    inlines the whole upstream expression tree into that filter —
-    #    re-running the full minhash pipeline once more per row) and
-    #    NOT a union of per-band projections (each union branch
-    #    re-evaluates the whole signature pipeline; subtrees are not
-    #    shared across branches).
-    # seed count must mirror texthash's md5-chunk packing exactly:
-    # minhash_from_digest_arrays indexes digest_cols[i // chunks_per_md5]
-    n_seeds = -(-num_hashes // TH._CHUNKS_PER_MD5)
-    sig = (
-        df.select(F.col(id_col), TH.shingles(F.col(content_col), shingle_n).alias("_sh"))
-        .select(
-            F.col(id_col),
-            *[
-                F.transform(F.col("_sh"), TH.salted_digest_fn(seed)).alias(f"_d{seed}")
-                for seed in range(n_seeds)
-            ],
-        )
-        .select(
-            F.col(id_col),
-            TH.minhash_from_digest_arrays(
-                [F.col(f"_d{s}") for s in range(n_seeds)], num_hashes
-            ).alias("_sig"),
-        )
+    # fan_out: md5-per-shingle must not run on one input split
+    shingled = fan_out(df).select(
+        F.col(id_col), TH.shingles(F.col(content_col), shingle_n).alias("_sh")
     )
-    # rule 2 above: one projection computes the band keys off the
-    # materialized signature, stack() unpivots them, and the upstream
-    # runs exactly once.
-    keys = sig.select(
-        F.col(id_col),
-        *[TH.band_key(F.col("_sig"), b, rows).alias(f"_k{b}") for b in range(bands)],
-    )
-    stack_args = ", ".join(f"{b}, _k{b}" for b in range(bands))
-    return keys.selectExpr(
-        id_col, f"stack({bands}, {stack_args}) AS (band, key)"
-    )
+    return _signature_band_rows(shingled, id_col, "_sh", num_hashes, bands)
 
 
 def minhash_candidate_pairs(
@@ -171,30 +205,14 @@ def minhash_candidate_pairs(
     per near-dup cluster, so skew only appears if the corpus contains
     giant exact-dup clusters — run :func:`exact_dedup` first.
     """
-    exploded = minhash_band_rows(
-        df, content_col, id_col, num_hashes, bands, shingle_n
+    # persist the tiny band-key relation (bands rows x ~50B per doc):
+    # the self-join references it twice. MEMORY_AND_DISK spills instead
+    # of failing at scale; callers release() after their action (see
+    # flink_start_spark/cache.py for the ownership contract).
+    rows = C.track(
+        minhash_band_rows(df, content_col, id_col, num_hashes, bands, shingle_n)
     )
-    # The self-join references this subtree twice and Spark re-evaluates
-    # the whole shingle→digest→signature pipeline per reference; persist
-    # the tiny band-key relation (bands rows x ~50B per doc) so it is
-    # computed once. MEMORY_AND_DISK spills instead of failing at scale.
-    # Registered with cache.track — callers release() after their action
-    # (see flink_start_spark/cache.py for the ownership contract).
-    exploded = C.track(exploded)
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return LS.band_pairs(rows, id_col)
 
 
 def minhash_near_dups(
@@ -209,20 +227,8 @@ def minhash_near_dups(
     """Near-duplicate pairs: LSH candidates confirmed by exact Jaccard
     over distinct shingle sets. Output: id_a, id_b, jaccard (rounded 6)."""
     pairs = minhash_candidate_pairs(df, content_col, id_col, num_hashes, bands, shingle_n)
-    # referenced by two joins (id_a and id_b sides) → persist one pass
-    sh = (
-        fan_out(df)
-        .select(F.col(id_col), TH.shingles(F.col(content_col), shingle_n).alias("_sh"))
-        .select(F.col(id_col), F.array_distinct(F.col("_sh")).alias("sh"))
-    )
-    sh = C.track(sh)
-    return (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn("jaccard", F.round(TH.jaccard(F.col("sh_a"), F.col("sh_b")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sh = _shingle_sets(df, content_col, id_col, shingle_n)
+    return _jaccard_confirm(pairs, sh, id_col, "sh", threshold)
 
 
 def char_ngram_near_dups(
@@ -248,76 +254,28 @@ def char_ngram_near_dups(
     so the memoized count stays an empty-schema pruned scan and the
     oracle's ``count(*) FROM documents`` mirrors it exactly).
     """
-    if (num_hashes is None) != (bands is None):
-        raise ValueError(
-            "pass both num_hashes and bands, or neither (corpus-scaled auto)"
-        )
-    if num_hashes is None:
-        num_hashes, bands = LS.char_minhash_params(C.memo_count(df))
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands})"
-        )
-    rows = num_hashes // bands
-    n_seeds = -(-num_hashes // TH._CHUNKS_PER_MD5)
+    num_hashes, bands = _auto_minhash(
+        df, num_hashes, bands, LS.char_minhash_params
+    )
     docs = fan_out(df.filter(F.length(content_col) >= gram_n))
     # char grams via the same O(n) slice trick as word shingles: the
     # substring start index must not be referenced from a lambda
-    # persisted: referenced by both candidate-join sides (via pairs) and
-    # both sides of the Jaccard confirm — one gram-pipeline pass, not four
-    grams = docs.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.filter(
-                TH.char_grams(F.col(content_col), gram_n),
-                lambda g: F.length(g) == gram_n,
-            )
-        ).alias("_g"),
-    )
-    grams = C.track(grams)
-    pairs = grams.select(
-        F.col(id_col),
-        *[
-            F.transform(F.col("_g"), TH.salted_digest_fn(seed)).alias(f"_d{seed}")
-            for seed in range(n_seeds)
-        ],
-    ).select(
-        F.col(id_col),
-        TH.minhash_from_digest_arrays(
-            [F.col(f"_d{s}") for s in range(n_seeds)], num_hashes
-        ).alias("_sig"),
-    )
-    keys = pairs.select(
-        F.col(id_col),
-        *[TH.band_key(F.col("_sig"), b, rows).alias(f"_k{b}") for b in range(bands)],
+    # persisted: referenced by the signature stage and both sides of
+    # the Jaccard confirm — one gram-pipeline pass, not three
+    grams = C.track(
+        docs.select(
+            F.col(id_col),
+            F.array_distinct(
+                F.filter(
+                    TH.char_grams(F.col(content_col), gram_n),
+                    lambda g: F.length(g) == gram_n,
+                )
+            ).alias("_g"),
+        )
     )
     # persist: the self-join would otherwise run digests+signature twice
-    stack_args = ", ".join(f"{b}, _k{b}" for b in range(bands))
-    stacked = C.track(
-        keys.selectExpr(id_col, f"stack({bands}, {stack_args}) AS (band, key)")
-    )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    g2 = grams.select(F.col(id_col), F.col("_g").alias("grams"))
-    return (
-        cand.join(g2.withColumnRenamed(id_col, "id_a").withColumnRenamed("grams", "ga"), "id_a")
-        .join(g2.withColumnRenamed(id_col, "id_b").withColumnRenamed("grams", "gb"), "id_b")
-        .withColumn("jaccard", F.round(TH.jaccard(F.col("ga"), F.col("gb")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    rows = C.track(_signature_band_rows(grams, id_col, "_g", num_hashes, bands))
+    return _jaccard_confirm(LS.band_pairs(rows, id_col), grams, id_col, "_g", threshold)
 
 
 def connected_components(
@@ -582,7 +540,7 @@ def simhash_values(
     reorder/edit near-dups stay close.
 
     Staged projections (shingles → md5 array → 32 votes) so each array
-    materializes once; see minhash_candidate_pairs for why inlining
+    materializes once; see _signature_band_rows for why inlining
     would blow up.
     """
     return (
@@ -612,41 +570,32 @@ def simhash_near_dups(
     block-keyed bucket join (4 shuffles' worth of keys, no all-pairs).
     Output: id_a, id_b, hamming.
     """
-    # persist: the block self-join references the simhash pipeline twice
+    # persist: both sides of the block self-join read it
     sh = C.track(simhash_values(df, content_col, id_col, shingle_n))
-    # stack(), not explode/union — see minhash_candidate_pairs plan rules
-    key_cols = sh.select(
-        id_col,
-        "simhash",
+    # The kernel's id is the (id, simhash) struct: it orders by id first
+    # (ids are unique), so the pairs are the same, and the hash rides the
+    # candidate rows — the Hamming filter runs on the join output before
+    # band_pairs' distinct (joining the hash back on both ids after the
+    # distinct measured ~28% slower at sf0.1, 4 vCPU). A NULL id pairs
+    # with nothing, as under SQL `<`; a struct led by a NULL would order.
+    node = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("h"))
+    blocks = sh.filter(F.col(id_col).isNotNull()).select(
+        node.alias("_node"),
         *[
-            F.shiftright(F.col("simhash"), blk * 8)
-            .bitwiseAND(F.lit(255))
-            .alias(f"_b{blk}")
+            F.shiftright(F.col("simhash"), blk * 8).bitwiseAND(F.lit(255)).alias(f"_b{blk}")
             for blk in range(4)
         ],
     )
-    stack_args = ", ".join(f"{blk}, _b{blk}" for blk in range(4))
-    blocks = key_cols.selectExpr(
-        id_col, "simhash", f"stack(4, {stack_args}) AS (blk, key)"
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+    rows = LS.band_rows(blocks, "_node", [f"_b{blk}" for blk in range(4)])
+    return (
+        LS.band_pairs(rows, "_node")
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
+            F.col("id_a.id").alias("id_a"),
+            F.col("id_b.id").alias("id_b"),
+            F.bit_count(F.col("id_a.h").bitwiseXOR(F.col("id_b.h"))).alias("hamming"),
         )
-        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
     )
-    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def _passage_rows(
@@ -1025,25 +974,9 @@ def incremental_dedup_flags(
         F.col(id_col).alias("_c_id"), "band", "key"
     )
     cand = d.join(c, ["band", "key"]).select("_d_id", "_c_id").distinct()
-    sh = C.track(
-        fan_out(df).select(
-            F.col(id_col),
-            F.array_distinct(
-                TH.shingles(F.col(content_col), shingle_n)
-            ).alias("sh"),
-        )
-    )
+    sh = _shingle_sets(df, content_col, id_col, shingle_n)
     confirmed = (
-        cand.join(
-            sh.select(F.col(id_col).alias("_d_id"), F.col("sh").alias("_sh_d")),
-            "_d_id",
-        )
-        .join(
-            sh.select(F.col(id_col).alias("_c_id"), F.col("sh").alias("_sh_c")),
-            "_c_id",
-        )
-        .withColumn("_j", F.round(TH.jaccard(F.col("_sh_d"), F.col("_sh_c")), 6))
-        .filter(F.col("_j") >= threshold)
+        _jaccard_confirm(cand, sh, id_col, "sh", threshold, "_d_id", "_c_id")
         .groupBy("_d_id")
         .agg(F.count("*").alias("n_near_matches"))
         .withColumnRenamed("_d_id", id_col)

@@ -356,14 +356,10 @@ def lsh_topk(
     upgrade replaces sign buckets with k-means cells, same join
     topology. Queries with zero same-band candidates emit nothing.
     """
-    # One persisted projection per side = ONE scan of the input relation
-    # per query (the repo-wide re-evaluation rule: DataFrame references
-    # share no subtree without persist). Bands are then flattened to
-    # rows with stack() — a single (band, key) equi-join instead of a
-    # per-band union of joins, and stack (unlike explode) doesn't trip
-    # InferFiltersFromGenerate into cloning the upstream expressions.
-    # At 100 TB the persisted projection becomes a pre-materialized
-    # signature table written at ingest.
+    # One persisted projection per side (the band-join kernel's rules,
+    # lsh_scale.band_rows); the cross-side (band, key) equi-join
+    # broadcasts the query side. At 100 TB the persisted projection
+    # becomes a pre-materialized signature table written at ingest.
     if key_fn is None:
         key_fn = lambda col, b: V.sign_bits(col, bits, offset=b * bits)  # noqa: E731
 
@@ -383,9 +379,8 @@ def lsh_topk(
         )
 
     def stacked(df: DataFrame, prefix: str) -> DataFrame:
-        pairs = ", ".join(f"{b}, {prefix}_band{b}" for b in range(bands))
-        return df.selectExpr(
-            f"{prefix}_id", f"stack({bands}, {pairs}) AS (band, key)"
+        return LS.band_rows(
+            df, f"{prefix}_id", [f"{prefix}_band{b}" for b in range(bands)]
         )
 
     q = keyed(queries, "q")
@@ -743,12 +738,8 @@ def lsh_near_dup_pairs(
         bands, bits, auto_rp = LS.sign_params(C.memo_count(df), dim)
         if key == "auto":
             rp = auto_rp
-    # Persisted base projection (id, vec, band keys) = ONE scan of the
-    # input relation; bands flattened to rows with stack() so candidate
-    # generation is a single (band, key) hash self-join — an OR-of-bands
-    # predicate would degrade to a nested-loop cross join, the quadratic
-    # shape this operator exists to avoid, and a per-band union of joins
-    # would re-evaluate the projection per band without the persist.
+    # persisted base projection (id, vec, band keys): ONE scan of the
+    # input relation feeds both kernel sides and the cosine confirm
     if rp:
         keyed = _rp_keyed(df, bands, bits, dim, id_col, vec_col)
     else:
@@ -761,20 +752,8 @@ def lsh_near_dup_pairs(
             ],
         )
     keyed = C.track(keyed)
-    pairs = ", ".join(f"{b}, band{b}" for b in range(bands))
-    stacked = keyed.selectExpr(id_col, f"stack({bands}, {pairs}) AS (band, key)")
-    a, bb = stacked.alias("a"), stacked.alias("b")
-    candidates = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    candidates = LS.band_pairs(
+        LS.band_rows(keyed, id_col, [f"band{b}" for b in range(bands)]), id_col
     )
     # per-row norms ride the vec projections; only the dot fold runs
     # per candidate pair (vector.cosine_with_norms, guide §4.2)

@@ -1,10 +1,12 @@
 """Capture .explain("formatted") for named catalog queries into files.
 
-    python scripts/capture_plans.py plans/r10 _before q1 q2 ...
+    python scripts/capture_plans.py OUTDIR _before q1 q2 ...
 
-Writes plans/r10/<query><suffix>.txt for each query (sf0.1 — the
-driver's bench SF, so plan shapes match the timed runs; AQE initial
-plans). Cache-ownership contract between queries.
+Writes OUTDIR/<query><suffix>.txt for each query into any directory
+(created if missing). The corpus is ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 test corpus); plans are AQE initial plans. Caches are released
+between queries (cache.py's ownership contract), so each plan is
+captured cold.
 """
 
 from __future__ import annotations

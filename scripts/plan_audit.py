@@ -1,8 +1,8 @@
 """Physical-plan audit: print the formatted plan of each headline query
 plus the scale-relevant facts a reviewer checks (pushed filters, read
-schema, join strategies, exchange count). Regenerates PLANS.md:
+schema, join strategies, exchange count) to stdout as markdown:
 
-    python scripts/plan_audit.py > PLANS.md
+    python scripts/plan_audit.py > plans.md
 """
 
 from __future__ import annotations
@@ -60,7 +60,7 @@ def main() -> None:
     sf = "/root/testdata/sf0.001"
     print("# PLANS — physical-plan audit of headline queries\n")
     print(
-        "Regenerated by `python scripts/plan_audit.py > PLANS.md`.\n"
+        "Printed by `python scripts/plan_audit.py`.\n"
         "For each headline query: the scale-relevant plan facts, then the\n"
         "formatted plan. The pytest twin of this audit is\n"
         "`tests/test_plan_quality.py` (nested-loop ban, exchange budget,\n"

@@ -43,20 +43,27 @@ def test_fingerprint_dedup_catches_reorder(docs):
 
 
 def test_minhash_salt_is_engine_portable(spark):
-    # hash_i = 8-hex chunk (i%4) of md5("{i//4}|" + shingle), min over set
-    df = spark.createDataFrame([("a b c d e",)], "text string")
-    sig = df.select(
-        TH.minhash_signature(TH.shingles(F.col("text")), 6).alias("s")
-    ).collect()[0]["s"]
+    # hash_i = 8-hex chunk (i%4) of md5("{i//4}|" + shingle), min over set;
+    # band key = md5 of the band's signature slice joined by "|"
+    df = spark.createDataFrame([(1, "a b c d e")], "id long, text string")
+    feats = df.select("id", TH.shingles(F.col("text")).alias("sh"))
+    keys = {
+        r["band"]: r["key"]
+        for r in D._signature_band_rows(feats, "id", "sh", 6, 2).collect()
+    }
     shingles = ["a b c", "b c d", "c d e"]
-    expected = [
+    sig = [
         min(
             hashlib.md5(f"{k // 4}|{s}".encode()).hexdigest()[(k % 4) * 8 : (k % 4) * 8 + 8]
             for s in shingles
         )
         for k in range(6)
     ]
-    assert sig == expected
+    expected = {
+        b: hashlib.md5("|".join(sig[b * 3 : (b + 1) * 3]).encode()).hexdigest()
+        for b in range(2)
+    }
+    assert keys == expected
 
 
 def test_minhash_near_dups_finds_pair(docs):
@@ -71,9 +78,17 @@ def test_minhash_near_dups_finds_pair(docs):
     assert all(4 not in p for p in pairs)
 
 
-def test_simhash_near_dup_blocks_equal_bruteforce(docs):
-    # the pigeonhole block join must produce exactly the brute-force set
-    sv = {r["doc_id"]: r["simhash"] for r in D.simhash_values(docs, "text", "doc_id").collect()}
+def test_simhash_near_dup_blocks_equal_bruteforce(spark, docs):
+    # the pigeonhole block join must produce exactly the brute-force set;
+    # a NULL id (here an exact dup of doc 1) pairs with nothing
+    docs = docs.union(
+        spark.createDataFrame([(None, "the quick brown fox jumps over the lazy dog")], docs.schema)
+    )
+    sv = {
+        r["doc_id"]: r["simhash"]
+        for r in D.simhash_values(docs, "text", "doc_id").collect()
+        if r["doc_id"] is not None
+    }
     brute = {
         (a, b)
         for a in sv

@@ -232,6 +232,42 @@ def test_half_specified_params_raise(small_docs):
 
 
 # ---------------------------------------------------------------------
+# Band-join kernel (band_rows + band_pairs) vs Python brute force
+# ---------------------------------------------------------------------
+
+
+def test_band_kernel_matches_bruteforce(spark):
+    keys = {  # id -> one key per band
+        1: ["x", "p", "m"],
+        2: ["x", "p", "n"],  # shares bands 0 AND 1 with id 1
+        3: ["y", "q", "m"],  # shares band 2 with id 1
+        4: ["z", "r", "o"],  # shares nothing
+        5: ["x", "s", "t"],  # band 0 with ids 1, 2
+        6: ["p", "x", "u"],  # id 1's keys in the WRONG bands: no pair
+    }
+    keyed = spark.createDataFrame(
+        [(i, *ks) for i, ks in keys.items()],
+        "id long, k0 string, k1 string, k2 string",
+    )
+    rows = LS.band_rows(keyed, "id", ["k0", "k1", "k2"])
+    got_rows = sorted((r["id"], r["band"], r["key"]) for r in rows.collect())
+    assert got_rows == sorted(
+        (i, b, k) for i, ks in keys.items() for b, k in enumerate(ks)
+    )
+    assert len(got_rows) == 3 * len(keys)
+    got = [(r["id_a"], r["id_b"]) for r in LS.band_pairs(rows, "id").collect()]
+    brute = {
+        (a, b)
+        for a in keys
+        for b in keys
+        if a < b and any(x == y for x, y in zip(keys[a], keys[b]))
+    }
+    assert len(got) == len(set(got))  # (1, 2) shares two bands, emitted once
+    assert set(got) == brute == {(1, 2), (1, 3), (1, 5), (2, 5)}
+    assert all(a < b for a, b in got)  # never self-paired, always ordered
+
+
+# ---------------------------------------------------------------------
 # Forced level > 0: full Spark pipeline vs full oracle, same overridden
 # base — hash parity on the ladder's ACTIVE branches
 # ---------------------------------------------------------------------

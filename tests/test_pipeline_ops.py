@@ -515,12 +515,20 @@ def test_minhash_band_rows_rejects_indivisible_bands(spark):
     from flink_start_spark.operators import dedup as D
 
     df = spark.createDataFrame([(1, "a b c d e")], "id long, text string")
-    # truncating division would silently drop signature positions
-    with pytest.raises(ValueError, match="multiple of"):
-        D.minhash_band_rows(df, "text", "id", num_hashes=16, bands=5)
-    # bands > num_hashes would degenerate to a universal md5('') bucket
-    with pytest.raises(ValueError, match="multiple of"):
-        D.minhash_band_rows(df, "text", "id", num_hashes=16, bands=17)
+    # both MinHash families (word shingles, char grams) resolve their
+    # width through the same checks
+    for fn in (D.minhash_band_rows, D.char_ngram_near_dups):
+        # truncating division would silently drop signature positions
+        with pytest.raises(ValueError, match="multiple of"):
+            fn(df, "text", "id", num_hashes=16, bands=5)
+        # bands > num_hashes would degenerate to a universal md5('') bucket
+        with pytest.raises(ValueError, match="multiple of"):
+            fn(df, "text", "id", num_hashes=16, bands=17)
+        # half an AND/OR construction must not silently default the other
+        with pytest.raises(ValueError, match="pass both"):
+            fn(df, "text", "id", num_hashes=16)
+        with pytest.raises(ValueError, match="pass both"):
+            fn(df, "text", "id", bands=4)
 
 
 def test_bpe_train_rejects_nonpositive_merges(spark):

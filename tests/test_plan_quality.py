@@ -203,17 +203,26 @@ def test_no_low_cardinality_window_partitions(spark, name):
 # plan must read the input ONLY through InMemoryRelation leaves — a bare
 # parquet `Relation` means some DataFrame reference re-evaluates the
 # projection (and re-scans the file) instead of hitting the cache.
-_SINGLE_SCAN = {"ann_topk_lsh", "embedding_near_dup_lsh", "char_ngram_jaccard_pairs"}
+_SINGLE_SCAN = {
+    "ann_topk_lsh",
+    "ann_topk_rp_lsh",
+    "char_ngram_jaccard_pairs",
+    "dedup_minhash_lsh",
+    "embedding_near_dup_lsh",
+    "embedding_near_dup_rp",
+    "lsh_recall_audit",
+    "simhash_near_dups",
+}
 
 
 @pytest.mark.parametrize("name", sorted(_SINGLE_SCAN))
 def test_persisted_projection_single_scan(spark, name):
     df = QUERIES[name].spark(spark, SF_SMOKE)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
+    # a bare (Local)Relation leaf; not InMemoryRelation, and not the
+    # HashedRelationBroadcastMode of a broadcast inside a cached plan
     uncached = [
-        line
-        for line in opt.splitlines()
-        if "Relation" in line and "InMemoryRelation" not in line
+        line for line in opt.splitlines() if re.search(r"(?<!InMemory)Relation\b", line)
     ]
     assert not uncached and opt.count("InMemoryRelation") > 0, (name, uncached)
 
