@@ -182,7 +182,9 @@ def _neighbours(obj: object) -> tuple[tuple[str, object], ...]:
     function: its globals, attributes of package modules it names
     (``S.with_rank``), function-local ``from flink_start_spark...
     import``, closure cells, and string constants that name a catalog
-    query (``QUERIES[name]``). A class reaches what its methods reach.
+    query (``QUERIES[name]``). A wrapped function (a catalog query's
+    plan memo, ``plans/catalog.py``) reaches what the function it wraps
+    reaches. A class reaches what its methods reach.
     A package global (``"module.name"``) reaches what its assignments
     read, so a rate table or a schema is hashed with the code using it."""
     if isinstance(obj, str):
@@ -196,6 +198,7 @@ def _neighbours(obj: object) -> tuple[tuple[str, object], ...]:
             if inspect.isfunction(fn):
                 out.extend(_neighbours(fn))
         return tuple(out)
+    obj = inspect.unwrap(obj)  # a catalog query's memo wrapper -> its build
     code = getattr(obj, "__code__", None)
     if code is None:
         return ()

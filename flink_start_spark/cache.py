@@ -25,6 +25,19 @@ The contract that resolves the tension:
 
 ``release`` is idempotent and safe to call between queries of a
 long-lived session; it only touches caches this library created.
+
+The package keeps three session memos, all under :func:`session_memo`'s
+rule (keyed on the SparkContext applicationId; an insert under a new
+context drops every other context's entries):
+
+- :func:`memo_count` — eager corpus counts, keyed on the canonicalized
+  plan and its files;
+- ``sources.catalog.parquet_schema`` — parquet footer schemas, keyed on
+  the path, the inference confs and the path's file listing;
+- ``plans.catalog``'s built-plan memo — each catalog query's analyzed
+  plan, keyed on the query, ``sf_dir``, the SQL confs and the listing of
+  every path it loaded. A hit re-:func:`track`s the caches the build
+  tracked, so the caller's :func:`release` contract is unchanged.
 """
 
 from __future__ import annotations
@@ -129,7 +142,8 @@ def memo_count(df: DataFrame) -> int:
 def session_memo(memo: dict[tuple, V], key: tuple, compute: Callable[[], V]) -> V:
     """``memo[key]``, computed by ``compute()`` on a miss — the one rule
     the package's session memos (this module's counts,
-    ``sources.catalog``'s parquet schemas) share. ``key[0]`` is the
+    ``sources.catalog``'s parquet schemas, ``plans.catalog``'s built
+    plans) share. ``key[0]`` is the
     SparkContext applicationId: a stopped context's entries can never
     hit again, so a miss first drops every other context's entries and
     the memo holds one session's values, not every session's."""

@@ -26,11 +26,22 @@ the key, and that load re-infers exactly as an unmemoized read would;
 only a rewrite that keeps a file's name, size and mtime goes unseen.
 Only local paths (no scheme, or ``file:``) are listed. Any other scheme,
 and a missing or empty path, is inferred on every call, as before.
+
+This is the second of the package's three session memos: the first,
+``cache.memo_count``, holds eager corpus counts; the third,
+``plans.catalog``'s built-plan memo, holds each catalog query's analyzed
+plan. The third reads its file key from here: ``load_table`` adds the
+path and listing of every load to the innermost :func:`recorded_loads`
+block, and a catalog query built inside another one's block hands its
+loads on to it with :func:`record_loads`.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,16 +113,50 @@ _INFERENCE_CONFS = (
 
 _SCHEMA_MEMO: dict[tuple, T.StructType] = {}
 
+#: a load's path and its :func:`_local_files` listing
+Load = tuple[str, tuple[tuple[str, int, int], ...]]
+
+_LOADS: ContextVar[list[Load] | None] = ContextVar("_LOADS", default=None)
+
+
+@contextmanager
+def recorded_loads() -> Iterator[list[Load]]:
+    """Collect the ``(path, listing)`` of every :func:`load_table` call
+    made inside the block, in call order; a nested block collects its
+    own loads only."""
+    loads: list[Load] = []
+    token = _LOADS.set(loads)
+    try:
+        yield loads
+    finally:
+        _LOADS.reset(token)
+
+
+def record_loads(loads: list[Load] | tuple[Load, ...]) -> None:
+    """Add ``loads`` to the innermost :func:`recorded_loads` block, if
+    one is open."""
+    outer = _LOADS.get()
+    if outer is not None:
+        outer.extend(loads)
+
+
+def local_root(path: str) -> str | None:
+    """The OS path of a local ``path`` (no scheme, or ``file:``); None
+    for any other scheme."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    return url.path if url.scheme else path
+
 
 def _local_files(path: str) -> tuple[tuple[str, int, int], ...]:
     """Every file under a local ``path`` (or ``path`` itself, if a file)
     as sorted ``(relative name, size, mtime_ns)``, listed with ``os``
     (no Spark job). Empty for a non-local scheme, a missing or empty
     path, or a file that vanished mid-listing."""
-    url = urlparse(path)
-    if url.scheme not in ("", "file"):
+    root = local_root(path)
+    if root is None:
         return ()
-    root = url.path if url.scheme else path
     try:
         if os.path.isfile(root):
             st = os.stat(root)
@@ -150,12 +195,16 @@ def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one named table from ``{sf_dir}/{name}.parquet``, with every
-    timestamp column restored to TimestampType (:func:`restore_timestamp`).
+    timestamp column restored to TimestampType (:func:`restore_timestamp`),
+    and record the path and its listing (:func:`recorded_loads`).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
     ensure_session_confs(spark)
     path = os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet")
+    # listed before Spark lists the path, so a file added in between
+    # makes the recorded listing older than the plan, never newer
+    record_loads([(path, _local_files(path))])
     schema = parquet_schema(spark, path)
     df = spark.read.schema(schema).parquet(path)
     actual = {f.name: f.dataType.simpleString() for f in schema.fields}

@@ -108,6 +108,14 @@ def test_fingerprint_reach_covers_helpers():
     )
 
 
+def test_catalog_queries_have_distinct_fingerprints():
+    """Each fingerprint hashes its query's own function, reached through
+    the plan-memo wrapper that ``query_map`` hands out: if the walk
+    hashed the shared wrapper instead, queries would collide."""
+    fps = entrymod._content_fingerprints()
+    assert len(set(fps.values())) == len(fps) == len(entrymod.query_map())
+
+
 def test_fingerprint_flips_on_reached_helper_edit(monkeypatch):
     """Editing a shared helper flips exactly the queries that reach it."""
     from flink_start_spark.operators import selection

@@ -217,8 +217,17 @@ _SINGLE_SCAN = {
 
 @pytest.mark.parametrize("name", sorted(_SINGLE_SCAN))
 def test_persisted_projection_single_scan(spark, name):
-    df = QUERIES[name].spark(spark, SF_SMOKE)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    # start cold, as test_plan_is_scale_safe does: a cache an earlier test
+    # left behind can substitute for part of this plan
+    from flink_start_spark import cache as _c
+
+    _c.release()
+    spark.catalog.clearCache()
+    try:
+        df = QUERIES[name].spark(spark, SF_SMOKE)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        _c.release()
     # a bare (Local)Relation leaf; not InMemoryRelation, and not the
     # HashedRelationBroadcastMode of a broadcast inside a cached plan
     uncached = [
